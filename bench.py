@@ -245,7 +245,7 @@ def embedding_pairs_probe(spark, reg, sf_dir: str) -> dict[str, float]:
 
 def mealy_throughput(spark) -> dict[str, float]:
     """Supplementary metric: the arbitrary-stateful-operator path
-    (applyInPandas keyed Mealy interpreter — the Python escape hatch for
+    (mapInArrow keyed Mealy interpreter — the Python escape hatch for
     semantics Catalyst can't express). 1M synthetic events across 1000
     keys; reports rows/sec so regressions in the Arrow/chunk-ordering
     machinery show up in the round-over-round record."""

@@ -213,11 +213,10 @@ def test_interpreter_allows_nan_in_float_streams(spark):
     ).orderBy("seq").collect()
     assert len(out) == 3, "NaN row must flow through, not raise"
     assert [out[0]["value"], out[2]["value"]] == [2.0, 6.0]
-    # the NaN slot comes back as NaN-or-NULL: pandas float columns use
-    # NaN as the null marker, so the Arrow return bridge may render it
-    # as NULL — either is the float identity Arrow assigns it
+    # the NaN slot comes back as NaN: the output column is built from
+    # Python floats straight into Arrow, where NaN is a value, not NULL
     v1 = out[1]["value"]
-    assert v1 is None or math.isnan(v1)
+    assert v1 is not None and math.isnan(v1)
 
 
 def test_interpreter_multikey_parallelism_pinned(spark):
@@ -239,3 +238,106 @@ def test_interpreter_multikey_parallelism_pinned(spark):
     assert "RepartitionByExpression" in plan, plan
     rows = {(r["k"], r["seq"]): r["value"] for r in out.collect()}
     assert rows[(2, 0)] == 21 and rows[(3, 2)] == 33
+
+
+def _spark_groups(df, key_col):
+    """Each key's values in seq order, grouped by Spark itself."""
+    rows = (
+        df.groupBy(key_col)
+        .agg(F.sort_array(F.collect_list(F.struct("seq", "value"))).alias("rows"))
+        .collect()
+    )
+    return {_norm_key(r[key_col]): [x["value"] for x in r["rows"]] for r in rows}
+
+
+def _norm_key(k):
+    return "NaN" if isinstance(k, float) and k != k else k
+
+
+def _outputs_by_key(out, key_col):
+    got = {}
+    for r in out.orderBy("seq").collect():
+        got.setdefault(_norm_key(r[key_col]), []).append((r["seq"], r["value"]))
+    return got
+
+
+def _assert_matches_spark_groups(sp, df, out):
+    got = _outputs_by_key(out, "key")
+    for k, vals in _spark_groups(df, "key").items():
+        want = list(eval_sp(sp, vals))
+        rows = got.pop(k, [])
+        assert [s for s, _ in rows] == list(range(len(want))), k
+        assert [v for _, v in rows] == want, k
+    assert not got
+
+
+@pytest.mark.parametrize(
+    "key_type, keys",
+    [
+        ("long", [None, 1, 2]),
+        ("string", [None, "a", "b"]),
+        ("double", [float("nan"), 1.5, None]),
+    ],
+)
+def test_interpreter_null_and_nan_keys_group_like_spark(spark, key_type, keys):
+    """NULL keys form one sub-stream and NaN keys another, exactly as
+    Spark's groupBy groups them: the key runs of the Arrow pass must not
+    start a fresh term at every NULL or NaN row."""
+    sp = alternate(filter_sp(lambda n: n % 2 == 0), filter_sp(lambda n: n % 2 == 1))
+    rows = [(keys[i % 3], i, (i * 7) % 11) for i in range(30)]
+    df = spark.createDataFrame(rows, f"key {key_type}, seq long, value long")
+    out = interpret_batch(sp, df, "long", key_col="key")
+    _assert_matches_spark_groups(sp, df, out)
+
+
+def test_interpreter_carries_terms_across_tiny_arrow_batches(spark):
+    """Three rows per Arrow batch: every key's stream, and every two-Get
+    window, is cut across batches; each key still equals ``eval_sp``
+    over its whole stream."""
+
+    def swap_forever():
+        return Get(lambda n1: Get(lambda n2: Put(n2, lambda: Put(n1, swap_forever))))
+
+    rows = [(f"k{i % 5}", i, i * 10) for i in range(57)]
+    df = spark.createDataFrame(rows, "key string, seq long, value long")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        out = interpret_batch(swap_forever(), df, "long", key_col="key")
+        _assert_matches_spark_groups(swap_forever(), df, out)
+    finally:
+        spark.conf.set(conf, old)
+
+
+@pytest.mark.parametrize(
+    "out_type, fn, want",
+    [
+        ("long", lambda v: v * 2**40 + 1, [2**40 + 1, 2**41 + 1, 3 * 2**40 + 1]),
+        ("double", lambda v: v / 4, [0.25, 0.5, 0.75]),
+        ("string", lambda v: f"s{v}", ["s1", "s2", "s3"]),
+        ("boolean", lambda v: v % 2 == 0, [False, True, False]),
+        ("array<long>", lambda v: [v] * v, [[1], [2, 2], [3, 3, 3]]),
+        (
+            "struct<n:long,s:string>",
+            lambda v: (v, str(v)),
+            [(1, "1"), (2, "2"), (3, "3")],
+        ),
+    ],
+)
+def test_interpreter_out_types(spark, out_type, fn, want):
+    """Each declared out_type round-trips exactly; a long stream comes
+    back as Python ints, never floats."""
+    df = to_stream_df(spark, [1, 2, 3])
+    got = collect_values(interpret_batch(map_sp(fn), df, out_type))
+    assert [tuple(v) if out_type.startswith("struct") else v for v in got] == want
+    assert all(type(v) is type(want[0]) for v in got if not out_type.startswith("struct"))
+
+
+def test_interpreter_unbuildable_output_names_type_and_key(spark):
+    """An output value the declared type cannot hold raises, naming the
+    type and the key — no silent truncation of 2.5 to 2."""
+    df = spark.createDataFrame([("a", 0, 1), ("b", 0, 2)], "key string, seq long, value long")
+    sp = map_sp(lambda v: v if v == 1 else v + 0.5)
+    with pytest.raises(Exception, match=r"cannot be built as out_type 'long' \(key 'b'\)"):
+        interpret_batch(sp, df, "long", key_col="key").collect()
