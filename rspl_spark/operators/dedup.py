@@ -337,86 +337,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def connected_components(
-    edges: DataFrame, src: str = "doc_a", dst: str = "doc_b", max_iters: int = 20
-) -> DataFrame:
-    """(doc_id, cluster) — cluster = min doc_id reachable through the
-    (undirected) edge set. The keep-one-per-cluster step after near-dup
-    pair mining.
-
-    Iterative min-label propagation with a driver-side fixpoint check:
-    per iteration one join + one agg, both keyed on node id. Label
-    propagation advances ONE HOP per iteration, so iterations ~ graph
-    diameter — fine for shallow near-dup clusters; for deep/chain-shaped
-    graphs use :func:`connected_components_star` (O(log n) rounds).
-
-    Lineage is truncated with localCheckpoint every 3 iterations (a
-    cached-only loop re-grows the plan tree each round and eventually
-    overwhelms the optimizer); non-convergence at max_iters raises a
-    warning instead of silently splitting clusters.
-    """
-    from pyspark.sql import functions as F
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-    )
-    und.cache()
-    labels = (
-        und.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-    changed = 0
-    for i in range(max_iters):
-        nbr_min = (
-            und.join(labels, und.b == labels.node)
-            .groupBy(F.col("a").alias("node2"))
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.node == F.col("node2"), "left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))).alias(
-                    "comp"
-                ),
-            )
-        )
-        if (i + 1) % 3 == 0:
-            new_labels = new_labels.localCheckpoint(eager=False)
-        else:
-            new_labels.cache()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        # the fixpoint check above was the last reader of the PREVIOUS
-        # labels — release it, or every iteration pins another snapshot
-        # in executor storage for the job's lifetime
-        if i > 0:
-            labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    und.unpersist()
-    if changed != 0:
-        import warnings
-
-        warnings.warn(
-            f"connected_components did not converge in {max_iters} iterations; "
-            "clusters deeper than the iteration budget are split. Use "
-            "connected_components_star (O(log n) rounds) for deep graphs.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.select(F.col("node").alias("doc_id"), F.col("comp").alias("cluster"))
-
-
 # Size gate for the driver union-find fast path. MEASURED, not guessed
 # (docs/bench/r16_cc_path_ab.json — interleaved A/B on mixed
 # chain+cluster graphs, noop sink, median of 3): the driver path wins
@@ -516,23 +436,32 @@ def connected_components_star(
     # profile showed 3 star rounds over a 173-EDGE graph costing ~6s of
     # pure per-stage scheduling: ~5 shuffles + 2 jobs per round over
     # sub-KB data). Below the cutover the canonical edge set is
-    # collected (bounded: 64k edges ≈ 2 MB — the broadcast-threshold
+    # collected (bounded: 262,144 edges ≈ 4 MB — the broadcast-threshold
     # class, not a data-sized collect) and labeled by exact union-find
-    # with min-id roots, which is BIT-IDENTICAL to the star fixpoint
-    # (each node keyed to its component minimum — integer labels, no
-    # floats, no ties). Above the cutover, or under a small caller
-    # iteration budget (where the legacy path could return a partial
-    # non-converged labeling that exact union-find would NOT
-    # reproduce: star CC converges in ~log2(diameter) rounds and
-    # diameter <= n_edges, so a budget of log2(n_edges)+4 guarantees
-    # the legacy path converges and the two agree), the distributed
-    # path is byte-for-byte the one that always ran. Crossover measured
-    # in docs/bench/r16_cc_path_ab.json; override with
+    # with min-id roots, which equals the converged star fixpoint (each
+    # node keyed to its component minimum — no ties). Only integral and
+    # string ids qualify: union-find orders ids with Python's `<`, which
+    # matches Spark's ordering for those types but not for floats (Spark
+    # orders NaN above every number and equal to itself; Python NaN
+    # comparisons are all false). Above the cutover, for other id types,
+    # or under a small caller iteration budget, the distributed path is
+    # byte-for-byte the one that always ran. The budget gate keeps a
+    # caller who asked for few rounds on the path that can return (and
+    # warn about) a partial labeling: the proven star bound (Kiveris et
+    # al.) is O(log² n) rounds, but the distributed path converged
+    # within log2(n_edges)+4 rounds on every measured graph. Crossover
+    # measured in docs/bench/r16_cc_path_ab.json; override with
     # spark.rspl.ccDriverMaxEdges (0 disables).
     import math as _math
 
+    from pyspark.sql.types import IntegralType, StringType
+
     _iters_safe = _math.ceil(_math.log2(max(n_edges, 2))) + 4
-    if 0 < n_edges <= _cc_driver_max_edges(edges.sparkSession) and max_iters >= _iters_safe:
+    if (
+        0 < n_edges <= _cc_driver_max_edges(edges.sparkSession)
+        and max_iters >= _iters_safe
+        and isinstance(e.schema["u"].dataType, (IntegralType, StringType))
+    ):
         return _cc_union_find_driver(e)
     converged = False
     for _ in range(max_iters):

@@ -34,10 +34,10 @@ Scale design (the part that matters at 100 TB):
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from rspl_spark.session import advisory_width
 
 # unsafe-row estimates for the adaptive width rule below: a node row is
 # one short string id (~40B header+payload); an edge row is two ids plus
@@ -49,39 +49,13 @@ _EDGE_ROW_BYTES = 96
 
 def _adaptive_width(df: DataFrame, n_rows: int, row_bytes: int) -> int:
     """Scale-adaptive partition width for the iteration frames: the AQE
-    coalescing rule (ceil(bytes / advisoryPartitionSizeInBytes), clamped
-    to [1, spark.sql.shuffle.partitions]) applied where AQE cannot run —
-    localCheckpoint'd RDDs have no Exchange for AQE to re-plan, so a
-    fixed width is paid as that many tasks per stage per iteration
-    regardless of volume. At cluster scale the byte term saturates at
-    the configured shuffle width, so the 100 TB plan is unchanged; this
-    is NOT a local[32] constant (measured r15: the 4-iteration PageRank
-    gate spent most of its non-setup time launching 32-task stages over
-    ~1 MB frames). ``spark.rspl.graphPartitions`` pins an explicit
-    width."""
-    spark = df.sparkSession
-    explicit = None
-    try:
-        explicit = spark.conf.get("spark.rspl.graphPartitions", None)
-    except Exception:
-        pass
-    if explicit:
-        return int(explicit)
-    try:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        cap = 200
-    try:
-        from rspl_spark.streaming.sources import _parse_bytes
-
-        advisory = _parse_bytes(
-            spark.conf.get(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"
-            )
-        )
-    except Exception:
-        advisory = 64 * 2**20
-    return max(1, min(cap, math.ceil(n_rows * row_bytes / max(advisory, 1))))
+    coalescing rule (:func:`rspl_spark.session.advisory_width`) applied
+    where AQE cannot run — localCheckpoint'd RDDs have no Exchange for
+    AQE to re-plan, so a fixed width is paid as that many tasks per
+    stage per iteration regardless of volume (measured r15: the
+    4-iteration PageRank gate spent most of its non-setup time
+    launching 32-task stages over ~1 MB frames)."""
+    return advisory_width(df.sparkSession, n_rows * row_bytes)
 
 
 def pagerank(
@@ -372,32 +346,6 @@ def khop_distances(
     return visited.withColumnRenamed("node", node_col)
 
 
-def _triangle_materialize(edges: DataFrame) -> str:
-    """A/B hook ONLY (tools/triangle_mat_ab.py): force materialization
-    of the triangle intermediates via ``spark.rspl.triangleMaterialize``
-    ∈ {und, o, both}; anything else (including unset — the default)
-    keeps the plain single plan.
-
-    Materialization was PROBED and DECLINED twice, with committed
-    evidence: r12 measured checkpointing losing 1.4-4x at 1.2M-120M
-    constant-degree edges; the r16 sweep
-    (docs/bench/r16_triangle_mat_sweep.json — gate shape at 5
-    interleaved reps, probe-stable, plus parquet-backed 1.2M/12M-edge
-    graphs) measured every variant WITHIN NOISE at gate scale (off
-    7.97 / und 8.24 / o 8.15 s median) and "o"/"both" losing up to 2x
-    at 12M edges (off 22.3 vs both 41.6 s). ReusedExchange already
-    shares the distinct/degree exchanges; what materialization saves is
-    only the post-exchange re-aggregation, and the blocks cost more
-    than that at every measured scale. The r15 −16% und reading did not
-    reproduce under a longer probe-stable A/B."""
-    spark = edges.sparkSession
-    try:
-        raw = (spark.conf.get("spark.rspl.triangleMaterialize", "") or "").strip().lower()
-    except Exception:
-        raw = ""
-    return raw if raw in ("und", "o", "both") else "off"
-
-
 def triangle_counts(
     edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
 ) -> DataFrame:
@@ -419,9 +367,6 @@ def triangle_counts(
         .where(F.col("a").isNotNull() & F.col("b").isNotNull())
         .distinct()
     )
-    mat = _triangle_materialize(edges)
-    if mat in ("und", "both"):
-        und = und.localCheckpoint(eager=False)
     deg = (
         und.select(F.col("a").alias("n"))
         .union(und.select(F.col("b").alias("n")))
@@ -435,17 +380,18 @@ def triangle_counts(
     kb = F.struct(F.col("db").alias("d"), F.col("b").alias("n"))
     # orient from the (degree, node)-smaller endpoint; carry v's rank
     # key so wedges order their two spokes without re-joining degrees.
-    # NOT materialized by default, by MEASUREMENT TWICE (r12 + the r16
-    # sweep, docs/bench/r16_triangle_mat_sweep.json): every checkpoint
-    # variant is within noise at gate scale and "o"/"both" lose up to
-    # 2x at 12M edges — see _triangle_materialize (A/B hook only)
+    # NOT materialized, by MEASUREMENT TWICE: r12 measured
+    # checkpointing losing 1.4-4x at 1.2M-120M edges, and the r16 sweep
+    # (docs/bench/r16_triangle_mat_sweep.json) put every und/o/both
+    # localCheckpoint variant within noise at gate scale and o/both
+    # losing up to 2x at 12M edges. ReusedExchange already shares the
+    # distinct/degree exchanges; materializing saves only the
+    # post-exchange re-aggregation, and the blocks cost more.
     o = e2.select(
         F.when(ka < kb, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(ka < kb, F.col("b")).otherwise(F.col("a")).alias("v"),
         F.when(ka < kb, kb).otherwise(ka).alias("kv"),
     )
-    if mat in ("o", "both"):
-        o = o.localCheckpoint(eager=False)
     wedges = (
         o.alias("x")
         .join(

@@ -8,6 +8,7 @@ match the DuckDB oracle), Arrow enabled for the pandas-UDF paths.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import SparkSession
@@ -71,16 +72,8 @@ def grouped_map_parallelism(spark: SparkSession) -> int:
     below eventual cluster cores, and AQE-exempt so never corrected)
     and is unavailable on Spark Connect (no ``sparkContext``). Take
     max(defaultParallelism, spark.sql.shuffle.partitions) — the larger
-    of "cores now" and "the cluster's configured shuffle width" — and
-    let deployments override both with ``spark.rspl.groupedMapParallelism``.
+    of "cores now" and "the cluster's configured shuffle width".
     """
-    explicit = None
-    try:
-        explicit = spark.conf.get("spark.rspl.groupedMapParallelism", None)
-    except Exception:
-        pass
-    if explicit:
-        return int(explicit)
     dp = 0
     try:
         dp = spark.sparkContext.defaultParallelism
@@ -92,3 +85,34 @@ def grouped_map_parallelism(spark: SparkSession) -> int:
     except Exception:  # e.g. "auto" on some platforms
         pass
     return max(dp, sp) or 200
+
+
+def _parse_bytes(v: str) -> int:
+    v = v.strip().lower()
+    for suf, mult in (("tb", 2**40), ("gb", 2**30), ("mb", 2**20),
+                      ("kb", 2**10), ("t", 2**40), ("g", 2**30),
+                      ("m", 2**20), ("k", 2**10), ("b", 1)):
+        if v.endswith(suf):
+            return int(float(v[: -len(suf)]) * mult)
+    return int(v)
+
+
+def advisory_width(spark: SparkSession, nbytes: int) -> int:
+    """The AQE coalescing rule, for plans AQE cannot re-plan:
+    ceil(nbytes / spark.sql.adaptive.advisoryPartitionSizeInBytes),
+    clamped to [1, spark.sql.shuffle.partitions]. At cluster scale the
+    byte term saturates at the configured shuffle width, so the scaled
+    plan is unchanged — this is NOT a local[N] constant."""
+    try:
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except Exception:
+        cap = 200
+    try:
+        advisory = _parse_bytes(
+            spark.conf.get(
+                "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"
+            )
+        )
+    except Exception:
+        advisory = 64 * 2**20
+    return max(1, min(cap, math.ceil(nbytes / max(advisory, 1))))

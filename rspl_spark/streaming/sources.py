@@ -15,13 +15,14 @@ each chunk file becomes one micro-batch, processed in mtime order.
 from __future__ import annotations
 
 import contextlib
-import math
 import os
 import tempfile
 import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+
+from rspl_spark.session import advisory_width, grouped_map_parallelism
 
 
 def scratch_dir(prefix: str = "rspl_scratch_") -> str:
@@ -370,16 +371,6 @@ def _tree_bytes(paths: list[str] | None) -> int:
 _STATE_BYTES_EXPANSION = 4
 
 
-def _parse_bytes(v: str) -> int:
-    v = v.strip().lower()
-    for suf, mult in (("tb", 2**40), ("gb", 2**30), ("mb", 2**20),
-                      ("kb", 2**10), ("t", 2**40), ("g", 2**30),
-                      ("m", 2**20), ("k", 2**10), ("b", 1)):
-        if v.endswith(suf):
-            return int(float(v[: -len(suf)]) * mult)
-    return int(v)
-
-
 def stream_state_partitions(spark: SparkSession, source_bytes: int) -> int:
     """Scale-adaptive shuffle/state width for a finite streaming replay.
 
@@ -390,37 +381,11 @@ def stream_state_partitions(spark: SparkSession, source_bytes: int) -> int:
     data it holds. Measured r15 at sf0.1: q_stream_stream_join runs
     19.8 s at the session's 32 shuffle partitions vs 6.0 s at 8 and
     4.4 s at 2; the data per batch is well under one advisory
-    partition. Apply the sizing rule AQE itself would use: width =
-    ceil(expanded input bytes / advisoryPartitionSizeInBytes), clamped
-    to [1, spark.sql.shuffle.partitions]. At cluster scale the input
-    volume dwarfs the advisory size, so the width saturates at the
-    configured shuffle width and the scaled plan is unchanged — this
-    is NOT a local[32] constant.
-
-    Deployments can pin an explicit width with
-    ``spark.rspl.streamStatePartitions``.
+    partition. Apply the sizing rule AQE itself would use
+    (:func:`rspl_spark.session.advisory_width`) to the expanded input
+    bytes.
     """
-    explicit = None
-    try:
-        explicit = spark.conf.get("spark.rspl.streamStatePartitions", None)
-    except Exception:
-        pass
-    if explicit:
-        return int(explicit)
-    try:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        cap = 200
-    try:
-        advisory = _parse_bytes(
-            spark.conf.get(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"
-            )
-        )
-    except Exception:
-        advisory = 64 * 2**20
-    n = math.ceil(source_bytes * _STATE_BYTES_EXPANSION / max(advisory, 1))
-    return max(1, min(cap, n))
+    return advisory_width(spark, source_bytes * _STATE_BYTES_EXPANSION)
 
 
 # sized_stream_shuffle mutates SESSION-global shuffle width for the
@@ -470,8 +435,6 @@ def sized_stream_shuffle(
         return
     n = stream_state_partitions(spark, _tree_bytes(source_dirs))
     if python_stateful:
-        from rspl_spark.session import grouped_map_parallelism
-
         n = max(n, grouped_map_parallelism(spark))
     with _SIZED_SHUFFLE_LOCK:
         old = spark.conf.get("spark.sql.shuffle.partitions")

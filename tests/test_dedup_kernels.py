@@ -132,3 +132,46 @@ def test_cc_driver_fast_path_parity_and_gating(spark):
     slow_plan = connected_components_star(df, max_iters=5)._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in fast_plan or "LocalRelation" in fast_plan
     assert "Union" in slow_plan
+
+
+def test_cc_float_ids_with_nan_match_distributed_path(spark):
+    """The driver union-find orders ids with Python's `<`, which cannot
+    order NaN (Spark orders NaN above every number and equal to itself),
+    so float ids stay on the distributed star path: default settings
+    give the same labels as forcing that path."""
+    import math
+    import signal
+
+    from rspl_spark.operators.dedup import connected_components_star
+
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [(1.0, nan), (nan, 3.0), (2.0, 5.0), (5.0, 7.5), (nan, nan)],
+        "doc_a double, doc_b double",
+    )
+
+    def labels(frame):
+        norm = lambda x: "NaN" if math.isnan(x) else x  # noqa: E731
+        return {(norm(d), norm(c)) for d, c in frame.collect()}
+
+    spark.conf.set("spark.rspl.ccDriverMaxEdges", "0")  # force distributed
+    try:
+        want = labels(connected_components_star(df))
+    finally:
+        spark.conf.unset("spark.rspl.ccDriverMaxEdges")
+
+    def _stuck(signum, frame):
+        raise TimeoutError("connected_components_star did not return on NaN ids")
+
+    old = signal.signal(signal.SIGALRM, _stuck)
+    signal.alarm(120)
+    try:
+        got = labels(connected_components_star(df))
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)
+    assert got == want
+    assert want == {
+        ("NaN", 1.0), (1.0, 1.0), (3.0, 1.0),
+        (2.0, 2.0), (5.0, 2.0), (7.5, 2.0),
+    }

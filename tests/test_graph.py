@@ -340,8 +340,8 @@ def test_khop_null_endpoints_dropped(spark):
 def test_adaptive_width_rule(spark):
     """r15 optimization pin: the materialized-frame width derives from
     counted rows via the AQE advisory rule — tiny graphs get 1
-    partition, huge byte estimates saturate at the session shuffle
-    width, and spark.rspl.graphPartitions pins an explicit width."""
+    partition and huge byte estimates saturate at the session shuffle
+    width."""
     from rspl_spark.operators.graph import (
         _EDGE_ROW_BYTES,
         _adaptive_width,
@@ -352,11 +352,6 @@ def test_adaptive_width_rule(spark):
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert _adaptive_width(df, 10, _EDGE_ROW_BYTES) == 1
     assert _adaptive_width(df, 10**12, _EDGE_ROW_BYTES) == cap
-    spark.conf.set("spark.rspl.graphPartitions", "7")
-    try:
-        assert _adaptive_width(df, 10, _EDGE_ROW_BYTES) == 7
-    finally:
-        spark.conf.unset("spark.rspl.graphPartitions")
     # the rule is live in pagerank (tiny graph -> 1-partition frames):
     # ranks on a 3-node chain still come out exact (semantics pinned by
     # test_pagerank_* above; this run just exercises the width path)

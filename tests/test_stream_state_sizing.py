@@ -6,9 +6,9 @@ volume (bytes / advisory partition size, clamped to the configured
 shuffle width), with a compute-parallelism floor for Python-stateful
 streams. These tests pin the sizing rule's edges: tiny input → 1,
 large input → saturates at the session width (the cluster plan is
-unchanged), Python-stateful floors at grouped-map parallelism, the
-explicit conf override wins, and the session conf is restored after a
-sized run — including when the stream raises.
+unchanged), Python-stateful floors at grouped-map parallelism, and
+the session conf is restored after a sized run — including when the
+stream raises.
 """
 
 from __future__ import annotations
@@ -48,15 +48,6 @@ def test_width_scales_with_bytes_between_extremes(spark):
     got = stream_state_partitions(spark, bytes_for_two)
     assert 1 <= got <= cap
     assert got == min(cap, 2)
-
-
-def test_explicit_override_wins(spark):
-    spark.conf.set("spark.rspl.streamStatePartitions", "5")
-    try:
-        assert stream_state_partitions(spark, 10_000) == 5
-        assert stream_state_partitions(spark, 2**40) == 5
-    finally:
-        spark.conf.unset("spark.rspl.streamStatePartitions")
 
 
 def test_python_stateful_floors_at_grouped_map_parallelism(spark, tmp_path):

@@ -1,13 +1,19 @@
-"""Dump physical plans for the flagship queries → docs/plans/*.txt.
+"""Dump .explain("formatted") physical plans → docs/plans/<query>.txt.
 
 Evidence artifacts: PushedFilters / ReadSchema / join strategies /
 exchange counts are visible without running anything.
 
-Usage: python tools/dump_plans.py [sf_dir]
+Usage: python tools/dump_plans.py [--out DIR] [--suffix before|after]
+                                  [sf_dir] [query ...]
+  --out     output directory (default docs/plans under the repo root)
+  --suffix  write <query>_<suffix>.txt instead of <query>.txt, for
+            before/after plan pairs of an optimization
+With no query list, dumps the flagship set below.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -80,19 +86,30 @@ FLAGSHIPS = [
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs", "plans")
-    os.makedirs(out_dir, exist_ok=True)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--out", default=os.path.join(root, "docs", "plans"))
+    ap.add_argument("--suffix", choices=("before", "after"))
+    ap.add_argument("args", nargs="*", metavar="[sf_dir] [query ...]")
+    ns = ap.parse_args()
+    argv = list(ns.args)
+    sf_dir = argv.pop(0) if argv and os.path.isdir(argv[0]) else "/root/testdata/sf0.1"
+    names = argv or FLAGSHIPS
+    os.makedirs(ns.out, exist_ok=True)
     reg = load_registry()
     spark = get_spark("plans")
-    for name in FLAGSHIPS:
-        df = reg[name].fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+    for name in names:
+        stem = f"{name}_{ns.suffix}" if ns.suffix else name
+        try:
+            df = reg[name].fn(spark, sf_dir)
+            plan = df._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+            )
+        except Exception as e:
+            plan = f"ERROR dumping plan: {e}"
+        with open(os.path.join(ns.out, f"{stem}.txt"), "w") as f:
             f.write(plan)
-        print(f"wrote {name} ({len(plan)} chars)")
+        print(f"wrote {stem} ({len(plan)} chars)")
 
 
 if __name__ == "__main__":
