@@ -11,9 +11,10 @@ Two execution paths:
   expressions — Catalyst fuses them (its analog of the reference's Put/Get
   fusion, src/combinators.rs:101-120).
 - **interpret** (rspl_spark.dsl.interpreter): runs ANY term, including
-  stateful ones (alternate, multi-Get windows, FSMs), via applyInPandas
-  over seq-ordered partitions — the Spark analog of the trampolined
-  ``eval`` (src/lib.rs:249-285).
+  stateful ones (alternate, multi-Get windows, FSMs), via one mapInArrow
+  pass over key-sorted, seq-ordered partitions, feeding each key's rows
+  to the term a chunk at a time (``StreamProcessor.feed``) — the Spark
+  analog of the trampolined ``eval`` (src/lib.rs:249-285).
 """
 
 from rspl_spark.dsl.core import Get, Put, StreamProcessor, eval_sp  # noqa: F401

@@ -45,6 +45,10 @@ class MapSP(StreamProcessor):
     def step(self) -> StreamProcessor:
         return Get(lambda a: Put(self.py_fn(a), lambda: self))
 
+    def feed(self, values: list) -> tuple[list, StreamProcessor]:
+        f = self.py_fn
+        return [f(a) for a in values], self
+
 
 class FilterSP(StreamProcessor):
     """filter(p): drop failing elements (src/combinators.rs:143-154)."""
@@ -61,6 +65,10 @@ class FilterSP(StreamProcessor):
             return self.step()
 
         return Get(cont)
+
+    def feed(self, values: list) -> tuple[list, StreamProcessor]:
+        p = self.py_fn
+        return [a for a in values if p(a)], self
 
 
 class ComposeSP(StreamProcessor):
@@ -113,6 +121,14 @@ class ComposeSP(StreamProcessor):
             # the raw sp2: re-stepping a deep downstream chain on every
             # input element would cost O(pipeline depth) per element
             return Get(lambda a, s1=s1, s2=s2: ComposeSP(s1.cont(a), s2))
+
+    def feed(self, values: list) -> tuple[list, StreamProcessor]:
+        # The whole chunk through sp1, then its outputs through sp2: the
+        # same outputs as the element-wise fusion loop, since sp2 sees the
+        # same input sequence, and both residuals have drained their Puts.
+        mid, r1 = self.sp1.feed(values)
+        outs, r2 = self.sp2.feed(mid)
+        return outs, ComposeSP(r1, r2)
 
 
 class AlternateSP(StreamProcessor):
@@ -196,6 +212,14 @@ class PacedGenerateSP(StreamProcessor):
             return Put(b, lambda: PacedGenerateSP(self.body, s2))
 
         return Get(cont)
+
+    def feed(self, values: list) -> tuple[list, StreamProcessor]:
+        body, state = self.body, self.state
+        outs = []
+        for _ in values:
+            b, state = body(state)
+            outs.append(b)
+        return outs, PacedGenerateSP(body, state)
 
 
 def paced_generate(body: Callable[[Any], tuple], state: Any) -> PacedGenerateSP:

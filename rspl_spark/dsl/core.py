@@ -22,6 +22,25 @@ Streams here are Python iterables. The reference's streams are necessarily
 infinite; finite iterators get prefix semantics — evaluation stops when a
 ``Get`` finds the input exhausted (the reference's termination-by-consumer,
 src/streams/mod.rs:41-52).
+
+``run_prefix`` is the specification of incremental evaluation: the outputs
+of a finite prefix and the residual term that resumes after it.
+``StreamProcessor.feed(values)`` is the chunk protocol that callers use
+instead (the interpreter per key run, the streaming Mealy runtime per
+micro-batch); its contract is exactly ``run_prefix``'s and its default body
+is ``run_prefix`` itself. Nodes that can take a whole chunk at once override
+it where that is exact and cheap — map and filter as one comprehension,
+compose by feeding its upstream's chunk output to its downstream, paced
+generate as one body step per input — and every other node keeps the
+stepwise trampoline. Two caveats follow from evaluating a chunk stage by
+stage rather than element by element:
+
+- ``py_fn`` must be pure: a compose runs its upstream over the whole chunk
+  before its downstream sees the first element, so side effects interleave
+  differently than under stepwise evaluation.
+- When two stages would both raise on a chunk, the exception surfaced may
+  come from a different stage than stepwise evaluation would raise (the
+  upstream's, from a later element).
 """
 
 from __future__ import annotations
@@ -43,6 +62,12 @@ class StreamProcessor:
 
     def eval(self, stream: Iterable[Any]) -> Iterator[Any]:
         return eval_sp(self, stream)
+
+    def feed(self, values: list) -> tuple[list, "StreamProcessor"]:
+        """Run a finite chunk of input: (outputs, residual term), exactly
+        as ``run_prefix(self, values)``. Nodes override this only where a
+        whole chunk can be evaluated at once with the same result."""
+        return run_prefix(self, values)
 
 
 class Get(StreamProcessor):

@@ -15,11 +15,13 @@ Execution is one Arrow pass per partition, not one pandas frame per key:
 Each partition then arrives as a stream of Arrow record batches in which
 every key's rows are contiguous and seq-ordered. ``interpret_partition``
 walks the batches in order, finds the key runs in each batch and feeds
-each run to ``run_prefix``. ``run_prefix`` returns the exact residual
-term after a finite prefix (src/lib.rs:249-285, late-tail rule
-included), so a key's stream may be cut anywhere: when a run reaches the
-end of a batch, its residual term and output ordinal carry into the next
-batch, and the key resumes there. No rows are buffered — memory stays
+each run to the term as one chunk (``StreamProcessor.feed``, whose
+contract is ``run_prefix``'s: the outputs and the exact residual term
+after a finite prefix, src/lib.rs:249-285, late-tail rule included; a
+map/filter/compose run is evaluated in bulk, anything else stepwise). So
+a key's stream may be cut anywhere: when a run reaches the end of a
+batch, its residual term and output ordinal carry into the next batch,
+and the key resumes there. No rows are buffered — memory stays
 bounded by one Arrow batch however long a key's stream is (the prefix
 consistency Structured Streaming relies on, applied inside one task).
 
@@ -39,7 +41,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rspl_spark.dsl.core import StreamProcessor, run_prefix
+from rspl_spark.dsl.core import StreamProcessor
 
 _SINGLE_KEY = "__rspl_key__"
 
@@ -146,7 +148,7 @@ def interpret_partition(
             s, e = bounds[j], bounds[j + 1]
             if j or not resume:
                 term, ordinal = sp, 0
-            got, term = run_prefix(term, vals[s:e])
+            got, term = term.feed(vals[s:e])
             if got:
                 outs.extend(got)
                 run_rows.append(s)

@@ -77,12 +77,12 @@ def grouped_map_parallelism(spark: SparkSession) -> int:
     dp = 0
     try:
         dp = spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect sessions have no sparkContext
+    except AttributeError:  # Spark Connect: PySparkAttributeError, no sparkContext
         pass
     sp = 0
     try:
         sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # e.g. "auto" on some platforms
+    except ValueError:  # e.g. "auto" on some platforms
         pass
     return max(dp, sp) or 200
 

@@ -5,7 +5,10 @@ continuation (a closure tree) is cloudpickled into GroupState between
 batches — the direct Spark analog of the reference's event-driven FSM
 pattern (tests/events.rs:32-55, states-as-continuations), where the
 evaluating thread's blocking ``tail()`` becomes "wait for the next
-micro-batch" (SURVEY.md §3 entry point 2).
+micro-batch" (SURVEY.md §3 entry point 2). Each micro-batch of a key is
+one chunk for ``StreamProcessor.feed`` (contract: ``run_prefix``), so
+map/filter/compose stages evaluate in bulk. A NULL value fails the query,
+naming its key, before it reaches pandas.
 
 Scale model: one FSM per key, all keys in parallel; state store holds one
 pickled continuation per key (bounded: a term is a finite closure tree).
@@ -24,6 +27,7 @@ from pyspark import cloudpickle
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType,
@@ -31,9 +35,22 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from rspl_spark.dsl.core import StreamProcessor, run_prefix
+from rspl_spark.dsl.core import StreamProcessor
 
 STATE_SCHEMA = StructType([StructField("sp", BinaryType())])
+
+
+def _values_not_null(stream_df: DataFrame, key_col: str, value_col: str, caller: str) -> DataFrame:
+    """Fail the query on a NULL value, naming its key. Without this the
+    pandas boundary turns NULL into NaN and an integral column into
+    floats, for that key's chunk only; NaN stays a legal double."""
+    v = stream_df[value_col]
+    msg = F.format_string(
+        f"{caller}: NULL value in stream (key %s); rspl streams carry values,"
+        " filter NULL rows first",
+        stream_df[key_col].cast("string"),
+    )
+    return stream_df.withColumn(value_col, F.when(v.isNull(), F.raise_error(msg)).otherwise(v))
 
 
 def run_mealy_stream_tws(
@@ -97,6 +114,7 @@ def run_mealy_stream_tws(
     # on a session this process did not create — the vendored protobuf
     # reaches workers via sc.environment per-function env vars
     enable_tws_runtime_for_session(stream_df.sparkSession)
+    stream_df = _values_not_null(stream_df, key_col, value_col, "run_mealy_stream_tws")
     use_timers = timeout_ms is not None or timeout_capability is not None
     out_schema = f"`{key_col}` string, `{seq_col}` long, `{value_col}` {out_type}"
 
@@ -160,7 +178,7 @@ def run_mealy_stream_tws(
             if chunks:
                 batch = pd.concat(chunks, ignore_index=True)
                 batch = batch.sort_values(seq_col, kind="mergesort")
-                outs_all, sp = run_prefix(sp, batch[value_col].tolist())
+                outs_all, sp = sp.feed(batch[value_col].tolist())
             now = timerValues.getCurrentProcessingTimeInMs()
             if timeout_capability is not None:
                 worker_free = self._schedule_caps(outs_all, now, worker_free)
@@ -171,7 +189,7 @@ def run_mealy_stream_tws(
 
         def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
             sp, n_out, worker_free = self._load()
-            outs, sp = run_prefix(sp, [timeout_event])
+            outs, sp = sp.feed([timeout_event])
             now = timerValues.getCurrentProcessingTimeInMs()
             if timeout_capability is not None:
                 worker_free = self._schedule_caps(outs, now, worker_free)
@@ -216,6 +234,7 @@ def run_mealy_stream(
     stream, and the timeout re-arms (SURVEY.md §2.1 "Feedback loop").
     """
     out_schema = f"`{key_col}` string, `{seq_col}` long, `{value_col}` {out_type}"
+    stream_df = _values_not_null(stream_df, key_col, value_col, "run_mealy_stream")
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout
         if timeout_ms is not None
@@ -230,7 +249,7 @@ def run_mealy_stream(
         outs_all = []
         if timeout_ms is not None and state.hasTimedOut:
             # Feedback: the armed timeout fires as an input event.
-            outs, sp = run_prefix(sp, [timeout_event])
+            outs, sp = sp.feed([timeout_event])
             outs_all.extend(outs)
         else:
             # Arrow delivers a key's micro-batch as multiple chunks
@@ -242,7 +261,7 @@ def run_mealy_stream(
             if chunks:
                 batch = pd.concat(chunks, ignore_index=True)
                 batch = batch.sort_values(seq_col, kind="mergesort")
-                outs_all, sp = run_prefix(sp, batch[value_col].tolist())
+                outs_all, sp = sp.feed(batch[value_col].tolist())
         # cloudpickle: continuations are closure trees, stdlib pickle
         # cannot serialize them.
         state.update((cloudpickle.dumps((sp, n_out + len(outs_all))),))
